@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.Try
 
 /** Round benchmark: one JSON line with per-query medians.
@@ -22,36 +21,32 @@ import scala.util.Try
 object Bench {
   val SWEEPS = 3
 
+  /** Bench's conf on top of [[GraftSession.harnessConf]], read from `env`. */
+  private[graft] def sessionConf(env: Map[String, String]): Seq[(String, String)] = Seq(
+    // experiment knob: AQE re-plans cost extra per-query overhead on
+    // tiny local data; default mirrors production (GraftSession: on)
+    "spark.sql.adaptive.enabled" -> env.getOrElse("SPARK_GRAFT_AQE", "true"),
+    // the one production AQE knob the star plans depend on (GraftSession
+    // rationale): hash-join instead of sorting when every build-side
+    // partition measures under the gate
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "256m",
+    // STATIC conf: the whole-stage-codegen class cache defaults to 100
+    // entries — a 170-query suite evicts every compiled class before
+    // its next sweep reuses it, so the untimed warmup's compile work
+    // was silently re-paid inside every timed sweep (isolated-JVM rows
+    // measured 30-100% faster than their in-sweep medians before this;
+    // a workload with more distinct plans than the default cache must
+    // size it, same as any production deployment would)
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
+  )
+
   private def loadavg(): String =
     Try(scala.io.Source.fromFile("/proc/loadavg").mkString.trim).getOrElse("")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // experiment knob: AQE re-plans cost extra per-query overhead on
-      // tiny local data; default mirrors production (GraftSession: on)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // the one production AQE knob the star plans depend on (GraftSession
-      // rationale): hash-join instead of sorting when every build-side
-      // partition measures under the gate
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      // STATIC conf: the whole-stage-codegen class cache defaults to 100
-      // entries — a 170-query suite evicts every compiled class before
-      // its next sweep reuses it, so the untimed warmup's compile work
-      // was silently re-paid inside every timed sweep (isolated-JVM rows
-      // measured 30-100% faster than their in-sweep medians before this;
-      // a workload with more distinct plans than the default cache must
-      // size it, same as any production deployment would)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness(cpus.toInt, sessionConf(sys.env))
     val queries = SparkEntry.queries // bind once: SparkEntry.queries is a def
     // optional trailing args: sweep only these queries (the incremental
     // path — merge the subset line into the full artifact with

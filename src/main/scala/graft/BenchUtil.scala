@@ -13,10 +13,10 @@ object BenchUtil {
     * (l24 measured as a bare scan), a final window with no rank filter
     * dropped (l9/u2), aggregate VALUE expressions pruned to their keys —
     * while the DuckDB column of every BENCHNOTES table fetched all rows
-    * (tools/ForceProbe: 1.1-2.7x skew per query). Rounds 10-14 used a
+    * (measured 1.1-2.7x skew per query). Rounds 10-14 used a
     * noop-sink v2 write: full materialization, but the write command
     * wraps the query in write-task setup + commit coordination that
-    * prices in PER JOB — tools/FloorCutProbe measured the tax at the
+    * prices in PER JOB — measured at the
     * driver's cpus=32 config: 4-11% of wall on the r14 suite's floor-
     * and heavy-row samples, pure harness overhead that DuckDB's side
     * never pays. The r15 drain keeps the materialization contract (the

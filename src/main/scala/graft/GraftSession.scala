@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Production session factory: the configuration this library is designed
-  * to run under on a real cluster. The driver harnesses (Verify/Bench)
-  * build their own minimal sessions; this is the deployment surface for
-  * library users, and the single place the 100 TB tuning knobs live.
+/** Session factory. [[tuned]]/[[local]] are the configuration this library
+  * is designed to run under on a real cluster: the deployment surface for
+  * library users, and the single place the 100 TB tuning knobs live. The
+  * harness mains (Verify, Bench, the tools) build deliberately minimal
+  * sessions through [[harness]] instead.
   */
 object GraftSession {
 
@@ -122,6 +123,31 @@ object GraftSession {
     val withRuntime = (tunedConf(shufflePartitions) ++ objectStoreConf ++ staticConf)
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
     withRuntime.config(extensionsConf._1, extensionsConf._2)
+  }
+
+  /** The pins every harness main shares: one shuffle partition per core,
+    * the UI off, and the UTC / nanos-as-long / no-NTZ timestamp reading
+    * [[tunedConf]] documents, without which the events fixture does not
+    * load as graft expects. */
+  def harnessConf(cores: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.ui.enabled" -> "false",
+  )
+
+  /** A harness main's session: `local[cores]` with [[harnessConf]], then the
+    * main's own `extra` pairs (a later pair wins on a shared key). None of
+    * the production tuning applies unless a main passes it: each harness
+    * states exactly what it measures under. */
+  def harness(cores: Int, extra: Seq[(String, String)] = Nil): SparkSession = {
+    val s = (harnessConf(cores) ++ extra)
+      .foldLeft(SparkSession.builder().master(s"local[$cores]")) {
+        case (b, (k, v)) => b.config(k, v)
+      }.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 
   /** Local development/test session (local[n], n shuffle partitions). */

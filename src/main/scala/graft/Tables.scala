@@ -16,7 +16,7 @@ object Tables {
 
   /** Parquet schema memo, keyed by path. `spark.read.parquet` without an
     * explicit schema runs footer inference on the DRIVER on every call —
-    * measured at ~25 ms per table reference (tools.FloorProbe: the "build"
+    * measured at ~25 ms per table reference (the DataFrame "build"
     * phase is 0.09-0.42 s/query, ~11 s of the sf0.1 suite total, with
     * 5-table joins like q3 paying 5 inferences). A real deployment reads
     * catalog tables whose schema is declared once in the metastore;

@@ -381,7 +381,7 @@ object Assembly {
     // 2: exact-dedup winners — a 16-byte hash rollup, never the rows.
     // The id manifest is consumed TWICE (segment screen + assembly);
     // materialize it once or each consumer re-derives the corpus scan —
-    // ExplainProbe measured the inlined form at 24 scans for the whole
+    // Probe plan measured the inlined form at 24 scans for the whole
     // query vs ~6 after this and the two window reworks below.
     val winners = gated
       .groupBy(xxhash64($"text").as("h")).agg(min($"doc_id").as("doc_id"))

@@ -133,7 +133,7 @@ object Similarity {
     val K = 4
     // the mined pair set is consumed three times (positive output, anchor
     // set, anti-join exclusion) — materialize it once or each consumer
-    // re-runs the bucket self-join (measured 7 scans vs 3, ExplainProbe;
+    // re-runs the bucket self-join (measured 7 scans vs 3, Probe plan;
     // PlanAuditSpec pins the fixed count). |pos| is LSH-collision-bound.
     val pos = posRaw
       .select($"vec_a", $"vec_b")

@@ -204,7 +204,7 @@ object Analytics {
     // ~|orders|-group hash tables back to back in one stage; with the
     // group key unique in orders the partial's reduction is marginal,
     // so one build is near-pure tax. The measured alternative
-    // (BenchStar's q2_sortagg_probe arm, r14 verdict item 4): keep the
+    // (r14 verdict item 4, a BenchStar arm through r15): keep the
     // SMJ and let spark.sql.execution.replaceHashWithSortAgg collapse
     // the pair into ONE Complete-mode SortAggregate streaming over the
     // join's own key order — the verdict lives in CROSSOVER.md.

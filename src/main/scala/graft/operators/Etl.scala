@@ -88,7 +88,7 @@ object Etl {
       // of partition dirs instead of tasks × dirs (the small-files killer).
       // The partition COUNT is pinned to the session's core count: without
       // it AQE coalesces this tiny exchange to ONE task and the writer
-      // opens every partition dir's parquet file serially — JobTrace
+      // opens every partition dir's parquet file serially — Probe trace
       // measured the whole query as one 1.0 s single-task write job while
       // 31 cores idled. Hashing the (city, day) dirs over defaultParallelism
       // tasks keeps the one-file-per-dir layout (each dir still lands

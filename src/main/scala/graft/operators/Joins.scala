@@ -156,7 +156,7 @@ object Joins {
     // ONE histogram materialization (16-byte rows, one per key): the hot
     // set is consumed three times below (totals, fact side, dim side),
     // and without the checkpoint each consumer would re-scan the fact —
-    // the probe measured 6 scans vs 2 (ExplainProbe; PlanAuditSpec pins
+    // the probe measured 6 scans vs 2 (Probe plan; PlanAuditSpec pins
     // the fixed plan). |hist| = |keys|, executor-local storage.
     val hist = fact.groupBy($"user_id").agg(count(lit(1)).as("k_n"))
       .localCheckpoint()

@@ -120,6 +120,14 @@ object TableLog {
       s"$key must be an integer, got '$v'"))
   }
 
+  /** [[confInt]] for byte-sized knobs past Int range. */
+  private[graft] def confLong(spark: SparkSession, key: String,
+      default: String): Long = {
+    val v = spark.conf.get(key, default)
+    v.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be an integer, got '$v'"))
+  }
+
   /** The manifest-stats / DV-pruning integral-key contract in one place:
     * long wire bounds are exact for these types and truncate for
     * everything else. */
@@ -753,7 +761,7 @@ object TableLog {
     * several jobs at once inside one application; a multi-commit fixture
     * build is N tiny independent write jobs whose wall is almost entirely
     * per-job floor (task launch + driver planning gaps between actions —
-    * JobTrace measures 60-150 ms per staged file set at sf0.1), so
+    * Probe trace measures 60-150 ms per staged file set at sf0.1), so
     * submitting them from a small pool overlaps the floors instead of
     * paying them end to end. Correctness is unchanged by construction:
     * staged dirs are DISJOINT and invisible to every reader until the
@@ -881,11 +889,17 @@ object TableLog {
         var trusted = true // every row group must carry usable stats
         var any = false    // at least one row group had a non-null value
         blocks.foreach { b =>
-          // case-INSENSITIVE name match: the former Spark-side aggregation
-          // resolved stats columns under the analyzer's default resolver,
-          // so a miscased caller still produced stats — the footer pass
-          // must not silently disable pruning where the old path pruned
-          b.getColumns.asScala.find(_.getPath.toDotString.equalsIgnoreCase(sc)) match {
+          // exact-case match first. The case-INSENSITIVE fallback keeps
+          // the former Spark-side aggregation's resolver (a miscased
+          // caller still gets stats), but only when it is unambiguous:
+          // under spark.sql.caseSensitive=true a file can hold `k` and
+          // `K` twins, and binding the wrong twin would log a range that
+          // prunes files still holding matching rows
+          val cols = b.getColumns.asScala
+          cols.find(_.getPath.toDotString == sc).orElse {
+            val ci = cols.filter(_.getPath.toDotString.equalsIgnoreCase(sc))
+            if (ci.size == 1) ci.headOption else None
+          } match {
             case Some(cc) =>
               val st = cc.getStatistics
               if (st == null || st.isEmpty) trusted = false

@@ -163,22 +163,13 @@ object MakeHeavy {
   }
 
   private[tools] def session(warehouse: Option[String] = None): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    graft.GraftSession.harness(cpus,
       // graft.Bench's r15 static conf, mirrored (the BenchHeavy sweep
       // runs ~80 distinct plans in one JVM — the default 100-entry
       // codegen cache thrashes exactly like the 170-query suite did)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-    warehouse.foreach(b.config("spark.sql.warehouse.dir", _))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      Seq("spark.sql.codegen.cache.maxEntries" -> "4000") ++
+        warehouse.map("spark.sql.warehouse.dir" -> _))
   }
 
   /** Re-register the bucketed tables written by a previous MakeHeavy run:

@@ -120,21 +120,6 @@ object BenchStar {
       "q3_plain_legacy" -> (() =>
         graft.operators.Analytics.q3From(spark, pq("region"), pq("nation"),
           pq("customer"), pq("orders"), pq("lineitem"))),
-      // r15 probe arm (verdict q2 item 4, "skip the partial agg"): keep
-      // the SMJ (SHJ conversion off) and let ReplaceHashWithSortAgg
-      // collapse the fused partial+final double hash build into ONE
-      // Complete-mode SortAggregate streaming over the join's own sort
-      // order — zero extra sort, zero partial pass. Per-arm conf scoping:
-      // the overrides are (re)set inside the closure right before the
-      // build, and every OTHER arm runs after resetBaseConf below, so the
-      // probe's session knobs never leak across arms or sweeps.
-      "q2_sortagg_probe" -> (() => {
-        spark.conf.set("spark.sql.execution.replaceHashWithSortAgg", "true")
-        spark.conf.set(
-          "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
-        graft.operators.Analytics.q2From(spark, pq("customer"), pq("orders"),
-          pq("lineitem"))
-      }),
       "q2_bucketed" -> (() => graft.operators.Analytics.q2From(spark, pq("customer"),
         spark.table("hv_orders_b"), spark.table("hv_lineitem_b").hint("merge"))),
       "q3_bucketed" -> (() => graft.operators.Analytics.q3From(spark, pq("region"),
@@ -172,30 +157,17 @@ object BenchStar {
     // FORCING (round 13): full-materialization noop-sink write, the same
     // protocol as graft.Bench/BenchHeavy since round 10. The `.count()`
     // forcing used here through round 12 was safe for the original sweep
-    // — q2/q3/a13 end in limit/TakeOrdered, which ForceProbe showed
-    // measure identically either way — but q1 (added this round) has no
+    // — q2/q3/a13 end in limit/TakeOrdered, which measured identically
+    // either way — but q1 (added this round) has no
     // limit, and under count() Catalyst prunes its aggregate VALUE
     // expressions to the grouping keys: the measured q1 was a gutted
     // plan (0.96s vs 2.9s honest at sf25) while DuckDB always fetched
     // full rows.
-    // restore the session knobs a conf-scoped probe arm (q2_sortagg_probe)
-    // may have set — every arm starts from the same baseline. The baseline
-    // is CAPTURED here, after SPARK_GRAFT_EXTRA_CONF applied: hardcoding
-    // the defaults would silently undo an extra-conf override of exactly
-    // these two keys on every arm — the documented A/B hook would measure
-    // the baseline while claiming the probe (r16 advice, medium).
-    val baseConf = Seq(
-      "spark.sql.execution.replaceHashWithSortAgg",
-      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")
-      .map(k => k -> spark.conf.get(k))
-    def resetBaseConf(): Unit =
-      baseConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    for ((_, fn) <- runnable) { resetBaseConf(); graft.BenchUtil.force(fn()) } // warmup: JIT + codegen + listing
+    for ((_, fn) <- runnable) graft.BenchUtil.force(fn()) // warmup: JIT + codegen + listing
 
     val samples = scala.collection.mutable.Map(
       runnable.map(_._1 -> Vector.empty[(Double, Double, Double)]): _*)
     for (_ <- 1 to SWEEPS; (name, fn) <- runnable) {
-      resetBaseConf()
       stageMs.set(0); spillB.set(0)
       val t0 = System.nanoTime()
       graft.BenchUtil.force(fn())

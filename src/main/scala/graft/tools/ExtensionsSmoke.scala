@@ -1,18 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke for the production config path: a session built with
   * `spark.sql.extensions=graft.plans.GraftExtensions` must have dot_f32
   * available without any runtime registration call. */
 object ExtensionsSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.harness(2, Seq(graft.GraftSession.extensionsConf))
     val d = spark.sql(
       "SELECT dot_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").head().getDouble(0)

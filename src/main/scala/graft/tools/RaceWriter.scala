@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.operators.TableLog
 
 /** One contending table-log writer PROCESS for the cross-JVM race proof
@@ -22,13 +21,9 @@ object RaceWriter {
     // the race spec drives the same contest through BOTH publish
     // primitives
     val logStore = if (args.length > 4) args(4) else "auto"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"race-writer-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.graft.logstore", logStore)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness(2, Seq(
+      "spark.app.name" -> s"race-writer-$id",
+      "spark.graft.logstore" -> logStore))
     spark.sparkContext.setLogLevel("ERROR")
     val deadline = System.currentTimeMillis() + 60000
     while (!gate.exists() && System.currentTimeMillis() < deadline) Thread.sleep(5)

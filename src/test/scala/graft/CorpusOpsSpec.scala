@@ -281,6 +281,16 @@ class CorpusOpsSpec extends SparkSpecBase {
     finally spark.conf.unset("spark.graft.bpe.vocabOnePartitionMaxBytes")
   }
 
+  test("l21: a malformed single-partition-vocab gate value fails naming its key") {
+    import spark.implicits._
+    val docs = Seq("ab ab", "cd").map(Tuple1(_)).toDF("text")
+    spark.conf.set("spark.graft.bpe.vocabOnePartitionMaxBytes", "1gb")
+    val e = try intercept[IllegalArgumentException](
+      graft.llm.TextAnalysis.bpeLearn(docs, 2).collect())
+    finally spark.conf.unset("spark.graft.bpe.vocabOnePartitionMaxBytes")
+    assert(e.getMessage.contains("spark.graft.bpe.vocabOnePartitionMaxBytes"), e.getMessage)
+  }
+
   test("l21: checkpoint ladder bounds plan depth without changing the merges") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"text")

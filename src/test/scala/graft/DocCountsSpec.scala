@@ -139,4 +139,33 @@ class DocCountsSpec extends org.scalatest.funsuite.AnyFunSuite {
     assertSameQueries("BENCHNOTES_SF50.md",
       graft.tools.BenchHeavy.SF50_QUERIES.toSet)
   }
+
+  test("README Running lists exactly the mains under src/main") {
+    // a new probe main cannot land undocumented, and a retired one cannot
+    // linger in the docs. Mains = top-level objects declaring `def main`
+    val decl = """(?m)^(?:(?:private|final|sealed|abstract|case)\S* )*(object|class|trait) (\w+)""".r
+    val mains = Files.walk(root.resolve("src/main/scala/graft")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        val pkg = """(?m)^package ([\w.]+)""".r.findFirstMatchIn(src).map(_.group(1))
+          .getOrElse(fail(s"$p: no package clause"))
+        val ds = decl.findAllMatchIn(src).toSeq
+        ds.zip(ds.drop(1).map(_.start) :+ src.length).collect {
+          case (d, end) if d.group(1) == "object" &&
+              src.substring(d.start, end).contains("def main(") => s"$pkg.${d.group(2)}"
+        }
+      }.toSet
+    val readme = read("README.md")
+    val start = readme.indexOf("\n## Running")
+    assert(start >= 0, "README: no '## Running' section")
+    val running = "(?s)^(.*?)(\n## |\\z)".r
+      .findFirstMatchIn(readme.substring(start + 1)).get.group(1)
+    val documented = """runMain (graft\.[\w.]+)""".r.findAllMatchIn(running)
+      .map(_.group(1)).toSet
+    assert(mains.contains("graft.Bench"), s"main scan missed graft.Bench: $mains")
+    assert(documented === mains,
+      s"undocumented mains: ${(mains -- documented).toSeq.sorted.mkString(", ")}; " +
+        s"documented but gone: ${(documented -- mains).toSeq.sorted.mkString(", ")}")
+  }
 }

@@ -49,4 +49,33 @@ class GraftSessionSpec extends SparkSpecBase {
       "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").head().getDouble(0)
     assert(r === 11.0)
   }
+
+  test("Bench and Verify sessions carry their former hand-written builders' conf, key for key") {
+    // the literal lists those builders set (at SPARK_GRAFT_CPUS=8): a
+    // drifted pin or extra silently changes what Verify dumps and Bench times
+    def conf(extra: Seq[(String, String)]): Map[String, String] = {
+      val all = GraftSession.harnessConf(8) ++ extra
+      assert(all.map(_._1).distinct.size === all.size, s"a key is set twice: $all")
+      all.toMap
+    }
+    val verify = Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+      "spark.ui.enabled" -> "false")
+    assert(conf(Nil) === verify)
+    val bench = Map(
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "256m",
+      "spark.sql.codegen.cache.maxEntries" -> "4000",
+      "spark.ui.enabled" -> "false")
+    assert(conf(Bench.sessionConf(Map.empty)) === bench)
+    assert(conf(Bench.sessionConf(Map("SPARK_GRAFT_AQE" -> "false")))
+      === bench + ("spark.sql.adaptive.enabled" -> "false"))
+  }
 }

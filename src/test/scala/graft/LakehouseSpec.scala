@@ -358,6 +358,26 @@ class LakehouseSpec extends SparkSpecBase {
     assert(got === want)
   }
 
+  test("stats under case-twin columns: each twin's range read keeps every row holding its values") {
+    import spark.implicits._
+    val table = s"${Etl.scratch(spark)}/stats_case_twin_table"
+    fs(table).delete(new Path(table), true)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      // k and K hold disjoint ranges: logging one twin's footer range
+      // under the other's name "proves" every file disjoint from a range
+      // that matches all of its rows
+      val df = (1L to 20L).map(i => (i, i + 1000L)).toDF("k", "K")
+      TableLog.commit(spark, table, TableLog.Action("schema", df.schema.json) +:
+        TableLog.stageWithStats(spark, table, df, "data/v1", Seq("k", "K"), 2))
+      for ((c, lo, hi) <- Seq(("k", 1L, 20L), ("K", 1001L, 1020L))) {
+        val got = TableLog.readAsOfRange(spark, table, 1, c, lo, hi)
+          .select(col(c)).as[Long].collect().sorted.toSeq
+        assert(got === (lo to hi), s"range read on $c dropped rows")
+      }
+    } finally spark.conf.unset("spark.sql.caseSensitive")
+  }
+
   test("stats wire format: round-trips through the manifest; pre-stats 2-field lines replay unchanged") {
     val a = TableLog.Action("add", "data/x/part-0.parquet",
       Seq(TableLog.FileStats("event_id", -3L, 42L)))

@@ -115,4 +115,32 @@ class ObserveSpec extends SparkSpecBase {
     assert(!lines(h).exists(_.contains("\"kind\":\"query\"")),
       s"record written after close:\n${lines(h).mkString("\n")}")
   }
+
+  test("observed metrics read synchronously after localCheckpoint under AQE: values on rows, count 0 and max null on an empty frame") {
+    // the contract cdfApply, prepareDelta and the connected-components
+    // loop rely on: the eager checkpoint runs the observed frame's OWN
+    // QueryExecution, so its observedMetrics are filled on return, with
+    // no wait on the listener bus
+    import spark.implicits._
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "true")
+    try {
+      val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "t")
+      def observed(from: org.apache.spark.sql.DataFrame, name: String) =
+        from.observe(name, count(lit(1)).as("n"),
+          count(when($"t" === "a", 1)).as("na"),
+          max(when($"k" >= 2L && $"k" <= 3L, 1L).otherwise(0L)).as("h"))
+      val rows = observed(df, "__ckpt_rows")
+      val ck = rows.localCheckpoint()
+      val m = rows.queryExecution.observedMetrics("__ckpt_rows")
+      assert((m.getAs[Long]("n"), m.getAs[Long]("na"), m.getAs[Long]("h")) === ((3L, 2L, 1L)))
+      assert(ck.count() === 3L)
+      val empty = observed(df.filter($"k" > 100L), "__ckpt_empty")
+      empty.localCheckpoint()
+      val e = empty.queryExecution.observedMetrics("__ckpt_empty")
+      assert(e.getAs[Long]("n") === 0L)
+      assert(e.isNullAt(e.fieldIndex("h")), s"max over zero rows: $e")
+    } finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
 }

@@ -621,7 +621,7 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(fmt.contains("WindowGroupLimit") && fmt.contains("Partial"), fmt)
     // the round-11 rework: winners checkpointed, segment screen and
     // language mix single-consumption — 4 corpus-table scans, not the
-    // 24 the inlined decision planes cost before (ExplainProbe)
+    // 24 the inlined decision planes cost before (Probe plan)
     val scans = "Scan parquet".r.findAllIn(
       df.queryExecution.executedPlan.toString).size
     assert(scans <= 4, s"a decision plane re-inlined its subtree: $scans scans")
