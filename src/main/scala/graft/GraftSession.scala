@@ -106,7 +106,6 @@ object GraftSession {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
   )
 
-  /** Apply graft's recommended SQL + committer conf to any builder. */
   /** STATIC confs — must be set at session BUILD time (conf.set on a
     * live session refuses them), which is why they live apart from
     * [[tunedConf]] (whose keys the spec proves runtime-settable):
@@ -119,6 +118,7 @@ object GraftSession {
   def staticConf: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "4000")
 
+  /** Apply graft's recommended SQL + committer conf to any builder. */
   def tuned(builder: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = {
     val withRuntime = (tunedConf(shufflePartitions) ++ objectStoreConf ++ staticConf)
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }

@@ -172,7 +172,7 @@ object AnnIndex {
     * vector in one native loop. Integer addition is order-independent, so
     * qdot is bit-equal to the exploded SUM the base oracle replays. */
   private def sq8RankedServe(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.DotI64.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
     val codes = Tables.readMemo(spark, ensureSq8(spark, sfDir))
     val q = codes.filter($"vec_id" === 0)

@@ -143,7 +143,7 @@ object Clustering {
     * stratum and assigns the live stream against the frozen codebook). */
   private[graft] def kmTrainFrom(emb: DataFrame): Seq[(Int, Int, Int, Long)] = {
     val spark = emb.sparkSession
-    graft.plans.PqEncode.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
     val vecs = emb.select($"vec_id", qvec.as("qv")).persist()
     try {
@@ -186,8 +186,7 @@ object Clustering {
   private[graft] def assignFull(emb: DataFrame,
       cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
     val spark = emb.sparkSession
-    graft.plans.PqEncode.register(spark)
-    graft.plans.DotI64.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
     val k = cent.map(_._2).max + 1
     val ccs: Seq[Long] = (0 until k).map { c =>
@@ -347,7 +346,7 @@ object Clustering {
 
   private def kmTrainSizedUncached(spark: SparkSession, sfDir: String, k: Int,
       sampleVecs: Long): Seq[(Int, Int, Int, Long)] = {
-    graft.plans.PqEncode.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()

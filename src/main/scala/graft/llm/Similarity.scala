@@ -34,7 +34,7 @@ object Similarity {
       s"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
   private[llm] def withNative(spark: SparkSession): SparkSession = {
-    graft.plans.DotF32.register(spark); spark
+    graft.plans.GraftFunctions.ensure(spark); spark
   }
 
   /** L3: brute-force cosine top-10 for query vec_id=0. */
@@ -249,7 +249,7 @@ object Similarity {
     // bit-equal to the aggregate(zip_with(...)) SQL fold this replaces —
     // the fold paid two nested interpreted lambdas per bit); signs are
     // splitmix64-derived inline, so no matrix materializes or broadcasts
-    graft.plans.RademacherSigs.register(embFrame.sparkSession)
+    graft.plans.GraftFunctions.ensure(embFrame.sparkSession)
     val withSigs = embFrame.withColumn("rsigs",
       expr(s"rademacher_sigs(embedding, ${seed}L, $signBits, $bands)"))
     def bandSig(b: Int): Column = col("rsigs").getItem(b)
@@ -854,7 +854,7 @@ object Similarity {
     * O(M·K·SUB) driver state — 16k longs at production width. */
   private[graft] def pqTrainSized(spark: SparkSession, sfDir: String,
       k: Int = PQ_K_PROD, sampleVecs: Long = PQ_TRAIN_VECS): Seq[(Int, Int, Int, Long)] = {
-    graft.plans.PqEncode.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
@@ -898,7 +898,7 @@ object Similarity {
   /** Encode every vector in ONE compiled pass: (vec_id, label, codes). */
   private[graft] def pqEncodeAll(spark: SparkSession, sfDir: String,
       cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
-    graft.plans.PqEncode.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
     Tables.embeddings(spark, sfDir)
       .crossJoin(broadcast(codebookDf(spark, cent)))

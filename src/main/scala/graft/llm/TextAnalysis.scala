@@ -49,7 +49,7 @@ object TextAnalysis {
     * comprehension. */
   def l4bLangId(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.ModelScore.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val stopMap = STOPWORDS.flatMap(s => Seq(s"'$s'", "1L")).mkString("map(", ", ", ")")
     Tables.documents(spark, sfDir)
       .withColumn("sc", expr(s"model_score(text, $stopMap, 0L)"))
@@ -205,7 +205,7 @@ object TextAnalysis {
     * Reused as the static side of the r11 streaming scorer. */
   def unigramModel(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.WordCountAgg.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     vocabulary(docs).select(vmnExpr.as("vmn"), oovExpr.as("oov_mn"))
   }
 
@@ -258,7 +258,7 @@ object TextAnalysis {
   def scoreWithModel(docs: DataFrame, model: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.ModelScore.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     docs
       .crossJoin(broadcast(model))
       .select($"doc_id", expr("model_score(text, vmn, oov_mn)").as("sc"))
@@ -305,7 +305,7 @@ object TextAnalysis {
   def bigramModel(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.WordCountAgg.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val top2 = docs
       .withColumn("words", split($"text", " "))
       .filter(size($"words") >= 2)
@@ -340,7 +340,7 @@ object TextAnalysis {
   def l17bBigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    // zero-lambda positional scoring (the l2f_pos shape): posexplode the
+    // zero-lambda positional scoring: posexplode the
     // token positions and compute each token's micronats in the flat
     // post-Generate projection — element_at/concat/try_element_at all run
     // inside whole-stage codegen and Generate pipelines `words` by
@@ -639,7 +639,7 @@ object TextAnalysis {
     * deterministic, and mirrored bit-for-bit by the oracle SQL. */
   def l7TfidfTopTerms(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.Md5Prefix48.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val tkey = expr("md5_prefix48(term)")
     val docs = Tables.documents(spark, sfDir)
     val terms = docs
@@ -681,7 +681,7 @@ object TextAnalysis {
     * is needed at all. */
   def l4fRepetitionStats(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.Md5Prefix48.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     // the bigram fan-out (split + transform + explode + digest) dominates;
     // spread the unsplittable scan so it runs on every core
     val withW = Tables.spread(Tables.documents(spark, sfDir))
@@ -724,7 +724,7 @@ object TextAnalysis {
     * `unicode(text[i])` oracle on all input, not just ASCII. */
   def l4eFingerprint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.RollingFp.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     Tables.documents(spark, sfDir)
       .select(
         $"doc_id",

@@ -59,7 +59,7 @@ object Analytics {
     * exactly the plan a 1000-executor network spreads. Conf
     * `spark.graft.star.dimBroadcast`: `auto` (gate, default) | `force`
     * (always hint — single-box / known-small deployments) | `off`
-    * (never — pure shuffle plan).
+    * (never — pure shuffle plan); any other value is refused.
     *
     * `gates` are COUNT thunks, cheapest first, each an UPPER BOUND on
     * (or exactly) the dim's rows; the first one inside the budget
@@ -68,15 +68,23 @@ object Analytics {
     * ambiguous middle pays the precise join-side count. */
   private def gatedBroadcast(spark: SparkSession, dim: DataFrame,
       gates: Seq[() => Long]): DataFrame =
-    spark.conf.get("spark.graft.star.dimBroadcast", "auto") match {
+    dimBroadcastMode(spark) match {
       case "force" => broadcast(dim)
       case "off" => dim
       case _ =>
-        if (gates.exists(_() <= broadcastBudget(spark))) broadcast(dim) else dim
+        val budget = broadcastBudget(spark)
+        if (gates.exists(_() <= budget)) broadcast(dim) else dim
+    }
+
+  private def dimBroadcastMode(spark: SparkSession): String =
+    spark.conf.get("spark.graft.star.dimBroadcast", "auto") match {
+      case m @ ("auto" | "force" | "off") => m
+      case v => throw new IllegalArgumentException(
+        s"spark.graft.star.dimBroadcast must be auto, force or off, got '$v'")
     }
 
   private def broadcastBudget(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.star.broadcastMaxDimRows", "3500000").toLong
+    TableLog.confLong(spark, "spark.graft.star.broadcastMaxDimRows", "3500000")
 
   /** Q2 plain form at scale [r13 verdict item 5]: the gate picks among
     * THREE plan shapes from measured survivor counts, because q2's
@@ -108,7 +116,7 @@ object Analytics {
     import spark.implicits._
     val cut = lit("1998-07-01").cast("timestamp")
     val maxRows = broadcastBudget(spark)
-    val mode = spark.conf.get("spark.graft.star.dimBroadcast", "auto")
+    val mode = dimBroadcastMode(spark)
     val cust = customer
       .filter($"c_mktsegment" === "BUILDING").select($"c_custkey")
     val dim = ordersT
@@ -269,7 +277,7 @@ object Analytics {
     // decides, so mid-size windows aren't wrongly rejected
     val gated = gatedBroadcast(spark, dim,
       Seq(() => inWindow.count(), () => dim.count()))
-    graft.plans.Sum128.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     lineitem
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
       .join(gated, $"l_orderkey" === $"o_orderkey")
@@ -310,7 +318,7 @@ object Analytics {
     // measured 2.1x on the whole bucketed query (DecProbe q3b_shipped
     // 3.5s vs q3b_postproj 1.7s at 150M rows); the join payload trades
     // one long for two raw doubles, a width the saved work dwarfs.
-    graft.plans.Sum128.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val items = lineitem
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
     orders

@@ -167,8 +167,11 @@ object Etl {
       // 500 GB hot dir compacts with 4000 writers, not 1. The partition
       // COUNT is pinned (the s5/s6 r18 finding): unsized, AQE coalesces
       // this exchange to one task at small byte sizes and the rewrite
-      // serializes; defaultParallelism scales with the session.
-      .repartition(spark.sparkContext.defaultParallelism,
+      // serializes. It is the larger of the session's cores and the
+      // (dir, bin) key count, so bins never share a writer on a small
+      // session and a big session still uses every core.
+      .repartition(
+        math.max(spark.sparkContext.defaultParallelism.toLong, bins.map(_._2).sum).toInt,
         (partCols.map(col) :+ pmod(xxhash64(dataCols: _*), $"__bins")): _*)
       .drop("__dir", "__bins")
   }

@@ -34,7 +34,7 @@ object Relational {
     * ceiling is 10^29. */
   def q1PricingSummary(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.Sum128.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     Tables.lineitem(spark, sfDir)
       .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
       .select($"l_returnflag", $"l_linestatus", $"l_quantity",
@@ -124,22 +124,9 @@ object Relational {
     * pins value parity across the adversarial shapes). */
   def p5ValidityFilter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.JsonGetLong.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     Tables.events(spark, sfDir)
       .withColumn("k", expr("json_long(props, 'k')"))
-      .filter($"k".isNotNull && $"k" >= 50)
-      .select($"event_id", $"k")
-      .orderBy($"event_id")
-  }
-
-  /** The get_json_object form [[p5ValidityFilter]] retired — kept as the
-    * measured ladder rung (SparkEntry.ladderQueries, the l2f_interp_md5
-    * convention): identical semantics, full Jackson tokenizer per row,
-    * so BENCHNOTES_HEAVY's Jackson-vs-native gap stays reproducible. */
-  def p5ValidityFilterJackson(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, sfDir)
-      .withColumn("k", expr("try_cast(get_json_object(props, '$.k') AS BIGINT)"))
       .filter($"k".isNotNull && $"k" >= 50)
       .select($"event_id", $"k")
       .orderBy($"event_id")

@@ -128,6 +128,16 @@ object TableLog {
       s"$key must be an integer, got '$v'"))
   }
 
+  /** [[confInt]] for fractional knobs (rates, fractions); NaN and the
+    * infinities are refused too — no knob means them. */
+  private[graft] def confDouble(spark: SparkSession, key: String,
+      default: String): Double = {
+    val v = spark.conf.get(key, default)
+    v.toDoubleOption.filter(d => !d.isNaN && !d.isInfinite)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$key must be a finite number, got '$v'"))
+  }
+
   /** The manifest-stats / DV-pruning integral-key contract in one place:
     * long wire bounds are exact for these types and truncate for
     * everything else. */

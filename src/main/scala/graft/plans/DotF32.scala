@@ -1,11 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -92,36 +89,5 @@ case class DotF32(left: Expression, right: Expression)
 }
 
 object DotF32 {
-  private val info = new ExpressionInfo(classOf[DotF32].getName, "dot_f32")
-  private val builder = (exprs: Seq[Expression]) => DotF32(exprs.head, exprs(1))
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("dot_f32", builder, "internal")
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` installs the native
-  * functions at session build time — the deployment-config path. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-      (exprs: Seq[Expression]) => DotF32(exprs.head, exprs(1))))
-    ext.injectFunction(Md5Prefix48.injection)
-    ext.injectFunction(ShingleHashes.injection)
-    ext.injectFunction(MinHashSigs.injection)
-    ext.injectFunction(RademacherSigs.injection)
-    ext.injectFunction(DotI64.injection)
-    ext.injectFunction(RollingFp.injection)
-    ext.injectFunction(WinnowHashes.injection)
-    ext.injectFunction(ModelScore.injection)
-    ext.injectFunction(BucketScore.injection)
-    ext.injectFunction(PqEncode.injection)
-    ext.injectFunction(WordCountAgg.injection)
-    ext.injectFunction(BloomFunctions.aggInjection)
-    ext.injectFunction(BloomFunctions.probeInjection)
-    ext.injectFunction(JsonGetLong.injection)
-  }
+  private[plans] val builder = (exprs: Seq[Expression]) => DotF32(exprs.head, exprs(1))
 }

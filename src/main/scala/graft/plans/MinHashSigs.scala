@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -67,22 +66,11 @@ object MinHashSigs {
   def lcgA(h: Int): Long = 1000003L * (h + 1) + 17
   def lcgB(h: Int): Long = 7919L * (h + 1) + 3
 
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 3,
       "minhash_sigs(text, k, numHashes) takes exactly 3 arguments")
     MinHashSigs(exprs.head,
       FoldableArgs.int("minhash_sigs", "k", exprs(1)),
       FoldableArgs.int("minhash_sigs", "numHashes", exprs(2)))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[MinHashSigs].getName, "minhash_sigs"),
-    builder))
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -105,18 +104,8 @@ object PqEncode {
     new GenericArrayData(codes)
   }
 
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 2, "pq_encode(qvec, codebook) takes exactly 2 arguments")
     PqEncode(exprs.head, exprs(1))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("pq_encode", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("pq_encode"),
-    new ExpressionInfo(classOf[PqEncode].getName, "pq_encode"),
-    builder))
 }

@@ -57,7 +57,7 @@ object RademacherSigs {
 
   // SQL surface: rademacher_sigs(embedding, seed, signBits, bands) with
   // foldable numeric literals (the Md5Prefix48/ShingleHashes pattern)
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 4,
       "rademacher_sigs(emb, seed, signBits, bands) takes exactly 4 arguments")
     RademacherSigs(exprs.head,
@@ -65,17 +65,6 @@ object RademacherSigs {
       FoldableArgs.int("rademacher_sigs", "signBits", exprs(2)),
       FoldableArgs.int("rademacher_sigs", "bands", exprs(3)))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rademacher_sigs", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("rademacher_sigs"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[RademacherSigs].getName, "rademacher_sigs"),
-    builder))
 
   /** Steele et al.'s splitmix64 finalizer — the shared PRN the Scala-side
     * matrix builder (Similarity.rademacher) and this expression both

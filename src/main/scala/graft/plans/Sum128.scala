@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
@@ -134,14 +133,9 @@ object Sum128 {
     else Decimal(new java.math.BigDecimal(unscaled, scale), 38, scale)
   }
 
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 2, "sum128(col, scale) takes exactly 2 arguments")
     Sum128(exprs.head, FoldableArgs.int("sum128", "scale", exprs(1)))
       .toAggregateExpression()
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sum128", builder, "internal")
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -138,20 +137,10 @@ object WinnowHashes {
     new GenericArrayData(if (m == nWin) out else java.util.Arrays.copyOf(out, m))
   }
 
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 3, "winnow_hashes(text, k, w) takes exactly 3 arguments")
     WinnowHashes(exprs.head,
       FoldableArgs.int("winnow_hashes", "k", exprs(1)),
       FoldableArgs.int("winnow_hashes", "w", exprs(2)))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_hashes", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_hashes"),
-    new ExpressionInfo(classOf[WinnowHashes].getName, "winnow_hashes"),
-    builder))
 }

@@ -58,8 +58,7 @@ object Paginated {
     // rows/second with keyed jitter, OFF by default (0) so recorded-table
     // replays run at full speed; a live deployment sets the conf and each
     // partition's client paces itself (see sources/Throttle.scala)
-    val maxPerSec = spark.conf.get("spark.graft.source.maxRowsPerSecond", "0").toDouble
-    val jitterFrac = spark.conf.get("spark.graft.source.rateJitter", "0.2").toDouble
+    val (maxPerSec, jitterFrac) = Throttle.knobs(spark)
     val looked = codes.as[Long].mapPartitions { it0 =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val it = Throttle.paced(it0, maxPerSec, jitterFrac, seed = pid.toLong)

@@ -24,6 +24,13 @@ package graft.sources
   * `maxPerSecond` and tests replay the schedule bit-for-bit. */
 object Throttle {
 
+  /** The pacing knobs every source reads on the driver, refused loudly
+    * when malformed: `spark.graft.source.maxRowsPerSecond` (default 0 =
+    * off) and `spark.graft.source.rateJitter` (default 0.2). */
+  def knobs(spark: org.apache.spark.sql.SparkSession): (Double, Double) = (
+    graft.operators.TableLog.confDouble(spark, "spark.graft.source.maxRowsPerSecond", "0"),
+    graft.operators.TableLog.confDouble(spark, "spark.graft.source.rateJitter", "0.2"))
+
   /** Wrap a partition iterator so elements release no faster than
     * `maxPerSecond` on average. `maxPerSecond <= 0` disables (identity).
     * `nanoTime`/`sleep` are injectable so specs assert the schedule

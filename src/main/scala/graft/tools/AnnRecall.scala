@@ -35,8 +35,7 @@ object AnnRecall {
     val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
     val out = if (args.length > 1) args(1) else "tools/ann_recall.json"
     val spark = MakeHeavy.session()
-    graft.plans.DotF32.register(spark)
-    graft.plans.RademacherSigs.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     import spark.implicits._
 
     val emb = graft.Tables.embeddings(spark, dir).cache()

@@ -206,9 +206,6 @@ object BenchHeavy {
     "q3_revenue_by_nation", "s5_s6_partitioned_sink", "l1_exact_dedup",
     "w1_topk_per_group", "r4_session_window", "a9_percentiles",
     "s4_point_lookup", "l2f_decontam", "l2f_gen",
-    // the l2f ladder rungs live in SparkEntry.ladderQueries (opt-in,
-    // negative results kept reproducible — BENCHNOTES_HEAVY has the story)
-    "l2f_interp_md5", "l2f_xxh", "l2f_roll", "l2f_pos",
     "l4f_repetition_stats", "l9_sequence_pack", "l11_source_mix",
     "l4g_quality_filter", "l1_xxh",
     // ANN family at scale (needs the round-6 MakeHeavy embeddings). The
@@ -304,11 +301,8 @@ object BenchHeavy {
     // where r11 priced the per-query training re-derivation instead
     "l29b_cluster_profile", "l30_cluster_prune", "r14_stream_cluster_assign",
     // round 12: the JSON-parse per-byte term priced at a tier where it is
-    // compute, not job floor — the p5/f2 watch item from the r11 verdict.
-    // p5_jackson is the retired get_json_object rung (ladder convention):
-    // identical semantics, full tokenizer per row, kept so the
-    // Jackson-vs-from_json-vs-native gap stays measured on demand
-    "p5_validity_filter", "f2_json_parse", "p5_jackson",
+    // compute, not job floor — the p5/f2 watch item from the r11 verdict
+    "p5_validity_filter", "f2_json_parse",
     // round 12: the rank family (ntile/percent_rank/cume_dist over one
     // window) — the last sf0.1 row at >=2x with a real denominator and
     // no tier point; prices the single user-keyed window exchange
@@ -321,10 +315,9 @@ object BenchHeavy {
 
   /** The sf25 scale-sweep subset (BENCHNOTES_SF25.md): the text/dedup
     * production paths — the compute-bound queries whose sf5→sf25 ratio
-    * trend is the "would this survive 100x" evidence. Ladder baselines and
-    * the mis-sized 8-bit ANN forms are excluded (their cost is documented
-    * once at sf5); l2f_pos stays as the one ladder rung cheap enough to
-    * track across tiers. Invoke as `BenchHeavy <sf25Dir> --sf25`.
+    * trend is the "would this survive 100x" evidence. The mis-sized 8-bit
+    * ANN forms are excluded (their cost is documented once at sf5).
+    * Invoke as `BenchHeavy <sf25Dir> --sf25`.
     *
     * The ANN family is deliberately NOT here: at sf25 l3g_sized runs ~100s
     * per pass, and keeping it in the interleaved sweep poisons every other
@@ -341,7 +334,7 @@ object BenchHeavy {
   val SF25_QUERIES: Seq[String] = Seq(
     "l2d_ngram_jaccard", "l7_tfidf_topterms", "l2e_connected_components",
     "l2b_lsh_candidates", "l4f_repetition_stats", "l4g_quality_filter",
-    "l2f_pos", "l2f_gen", "l2f_decontam", "l1_exact_dedup", "l11_source_mix",
+    "l2f_gen", "l2f_decontam", "l1_exact_dedup", "l11_source_mix",
     "q1_pricing_summary", "l1_xxh", "l9_sequence_pack", "l13_corpus_export",
     // round 9: the model-scored filter's sf5->sf25 trend — the build pass
     // is the vocab-sized exchange, the scoring pass is shuffle-free, so
@@ -416,8 +409,8 @@ object BenchHeavy {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
     // optional trailing args: run only these queries (scale-sweep aid —
-    // at sf25+ the deliberate ladder baselines would dominate the wall);
-    // `--sf25` expands to the canonical SF25_QUERIES subset
+    // at sf25+ the full heavy tier would dominate the wall); `--sf25`
+    // expands to the canonical SF25_QUERIES subset
     val only = args.drop(1).toSet match {
       case s if s == Set("--sf25") => SF25_QUERIES.toSet
       case s => s
@@ -520,8 +513,8 @@ object BenchHeavy {
         }))
     }
 
-    // bind once (defs); heavy tier resolves suite + opt-in ladder names
-    val queries = graft.SparkEntry.queries ++ graft.SparkEntry.ladderQueries
+    // bind once (defs)
+    val queries = graft.SparkEntry.queries
     val runnable: Seq[(String, () => DataFrame)] =
       (HEAVY_QUERIES.map(n => n -> (() => queries(n)(spark, dir))) ++
         bucketed ++ annSized ++ annBuild)

@@ -14,8 +14,7 @@ class BloomDecontamSpec extends SparkSpecBase {
   test("l27 equals the exact screen; the prefilter prunes; the sketch is fixed-size") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.plans.ShingleHashes.register(spark)
-    graft.plans.BloomFunctions.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
 
     val exact = graft.llm.Dedup.l2fDecontamGen(spark, sfDir)
     val bloom = graft.llm.Dedup.l27BloomDecontam(spark, sfDir)

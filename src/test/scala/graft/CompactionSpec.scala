@@ -96,4 +96,23 @@ class CompactionSpec extends SparkSpecBase {
     }
     assert(df.count() === hotRows)
   }
+
+  test("s10: the rewrite exchange widens to the bin count when bins outnumber the cores") {
+    val table = s"${Etl.scratch(spark)}/s10_table"
+    if (!Files.isDirectory(Paths.get(table))) Etl.s10Fragment(spark, sfDir, table)
+    val hot = Etl.partDirStats(spark, table, 1).sortBy(_.rel).take(3)
+    assert(hot.size === 3)
+    // a target of a quarter of the largest dir: that dir alone takes at
+    // least 4 bins, so the three dirs together outnumber 4 cores
+    val target = math.max(1L, hot.map(_.bytes).max / 4)
+    val binSum = hot.map(d => (d.bytes + target - 1) / target).sum
+    val cores = spark.sparkContext.defaultParallelism
+    assert(binSum > cores, s"fixture too small: $binSum bins vs $cores cores")
+    val df = Etl.compactionInput(spark, table, Seq("event_type"), hot, target)
+    val planned = df.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.outputPartitioning.numPartitions
+    }
+    assert(planned === Seq(binSum))
+  }
 }

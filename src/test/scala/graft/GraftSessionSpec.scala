@@ -44,7 +44,7 @@ class GraftSessionSpec extends SparkSpecBase {
 
   test("dot_f32 registers and evaluates on a fresh session") {
     val s = spark.newSession()
-    graft.plans.DotF32.register(s)
+    graft.plans.GraftFunctions.ensure(s)
     val r = s.sql("SELECT dot_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
       "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").head().getDouble(0)
     assert(r === 11.0)

@@ -9,7 +9,7 @@ class Md5Prefix48Spec extends SparkSpecBase {
 
   test("md5_prefix48 = conv(substr(md5(s),1,12),16,10) on varied strings; null-safe") {
     import spark.implicits._
-    graft.plans.Md5Prefix48.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val df = spark.range(500).toDF("i")
       .withColumn("s", concat(lit("pört_"), md5($"i".cast("string")), lit("_ü")))
       .withColumn("s2", when($"i" % 7 === 0, lit(null)).otherwise($"s"))

@@ -17,7 +17,7 @@ class ModelScoreSpec extends SparkSpecBase {
 
   test("model_score equals the composed split+fold; null-safe; rejects wrong types") {
     import spark.implicits._
-    graft.plans.ModelScore.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val df = spark.range(500).toDF("i")
       // text mixing vocab hits, misses, and the separator edge cases
       .withColumn("t", concat(
@@ -63,7 +63,7 @@ class ModelScoreSpec extends SparkSpecBase {
   test("word_count_agg equals explode+groupBy counts on the fixture corpus") {
     val sparkS = spark
     import sparkS.implicits._
-    graft.plans.WordCountAgg.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val docs = Tables.documents(spark, sfDir)
       // inject separator edge cases so empty tokens are covered
       .withColumn("text", when($"doc_id" % 17 === 0, concat(lit(" lead "), $"text", lit("  ")))

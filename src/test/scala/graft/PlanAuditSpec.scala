@@ -274,7 +274,7 @@ class PlanAuditSpec extends SparkSpecBase {
     val p = plan(q("l2f_gen"))
     assert(p.contains("shingle_hashes"), p)
     assert(p.contains("BroadcastHashJoin"), p)
-    // the ladder baselines' interpreted machinery must be absent
+    // the interpreted shingle-string machinery must be absent
     assert(!p.contains("array_distinct") && !p.contains("lambda"), p)
   }
 
@@ -493,7 +493,7 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(shEx.size == 1, s"expected one sh-keyed exchange:\n$fmt")
     assert(docEx.size == 1, s"expected one doc-keyed islands exchange:\n$fmt")
     // neither the anchor stream nor the flagged stream carries strings:
-    // the 5-gram dies in the scan-side projection (l2f_pos shape); the
+    // the 5-gram dies in the scan-side projection (positional keys); the
     // word-boundary match keeps n_words# (a long) from tripping words#
     for (b <- hashEx; bad <- Seq("text#", "\\bwords#"))
       assert(!bad.r.findFirstIn(blockLine(b, "Input")).isDefined,

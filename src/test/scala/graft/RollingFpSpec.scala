@@ -15,7 +15,7 @@ class RollingFpSpec extends SparkSpecBase {
 
   test("rolling_fp equals the composed fold on ASCII; code points beyond; null-safe") {
     import spark.implicits._
-    graft.plans.RollingFp.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val df = spark.range(300).toDF("i")
       .withColumn("s", concat(lit("doc "), md5($"i".cast("string")),
         lit(" end"), $"i".cast("string")))

@@ -192,6 +192,26 @@ class SemanticsSpec extends SparkSpecBase {
     }
   }
 
+  /** A star-gate knob that does not parse fails naming its key, before
+    * any gate count runs — never a bare NumberFormatException or a silent
+    * fall back to `auto`. */
+  private def assertStarKnobRefused(key: String, bad: String): Unit = {
+    spark.conf.set(key, bad)
+    val e = try intercept[IllegalArgumentException](
+      Analytics.q2PlainFrom(spark, Tables.customer(spark, sfDir),
+        Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)))
+    finally spark.conf.unset(key)
+    assert(e.getMessage.contains(key), e.getMessage)
+  }
+
+  test("a malformed broadcastMaxDimRows fails naming its key") {
+    assertStarKnobRefused("spark.graft.star.broadcastMaxDimRows", "3.5M")
+  }
+
+  test("an unknown dimBroadcast mode fails naming its key") {
+    assertStarKnobRefused("spark.graft.star.dimBroadcast", "forced")
+  }
+
   test("a9: the GK band holds at the guarantee, and the retired exact form still matches percentile_cont semantics") {
     import spark.implicits._
     // the DECLARED row: every group's rank bands true (the in-row verdict

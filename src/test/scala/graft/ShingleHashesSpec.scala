@@ -18,8 +18,7 @@ class ShingleHashesSpec extends SparkSpecBase {
 
   private def check(texts: Seq[String], algo: String, k: Int = 5): Unit = {
     import spark.implicits._
-    graft.plans.Md5Prefix48.register(spark)
-    graft.plans.ShingleHashes.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val df = texts.toDF("text")
       .withColumn("native", expr(s"shingle_hashes(text, $k, '$algo')"))
       .withColumn("sql",
@@ -53,9 +52,7 @@ class ShingleHashesSpec extends SparkSpecBase {
 
   test("non-foldable scalar args fail fast with a named AnalysisException") {
     import spark.implicits._
-    graft.plans.MinHashSigs.register(spark)
-    graft.plans.ShingleHashes.register(spark)
-    graft.plans.RademacherSigs.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val df = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
       df.select(expr("minhash_sigs(text, 5, doc_id)")).collect()
@@ -79,9 +76,7 @@ class ShingleHashesSpec extends SparkSpecBase {
 
   test("native minhash_sigs equals array_min over the LCG-transformed hash array") {
     import spark.implicits._
-    graft.plans.Md5Prefix48.register(spark)
-    graft.plans.ShingleHashes.register(spark)
-    graft.plans.MinHashSigs.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val (k, h) = (5, 16)
     val P = graft.plans.MinHashSigs.P
     // the interpreted composition the native form replaced: md5p48 hash
@@ -104,7 +99,7 @@ class ShingleHashesSpec extends SparkSpecBase {
 
   test("native rademacher_sigs equals the aggregate(zip_with) SQL fold") {
     import spark.implicits._
-    graft.plans.RademacherSigs.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val (seed, signBits, bands) = (7L, 8, 12)
     val proj = graft.llm.Similarity.rademacher(seed, bands * signBits, 64)
     // the interpreted composition the native expression replaced,

@@ -10,14 +10,12 @@ import org.scalacheck.rng.Seed
   * three primitive longs inside whole-stage codegen. */
 class Sum128Spec extends SparkSpecBase {
 
-  private def register(): Unit = graft.plans.Sum128.register(spark)
-
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(7L + i)))
 
   test("parity with decimal SUM on randomized longs, including carry-heavy magnitudes") {
     import spark.implicits._
-    register()
+    graft.plans.GraftFunctions.ensure(spark)
     // magnitudes chosen to force lo-word carries both directions: values
     // near ±2^62 make |partial| cross 2^64 within a handful of rows
     val gen = Gen.oneOf(
@@ -45,7 +43,7 @@ class Sum128Spec extends SparkSpecBase {
 
   test("a single group overflows a signed long but not the int128") {
     import spark.implicits._
-    register()
+    graft.plans.GraftFunctions.ensure(spark)
     // 40 copies of Long.MaxValue/2: a raw BIGINT sum dies (ANSI) or wraps
     // (legacy) at row 5; sum128 carries into the high word
     val df = Seq.fill(40)(Long.MaxValue / 2).toDF("x")
@@ -77,7 +75,7 @@ class Sum128Spec extends SparkSpecBase {
 
   test("null handling and scale: all-null group is NULL, nulls skipped, scale applied") {
     import spark.implicits._
-    register()
+    graft.plans.GraftFunctions.ensure(spark)
     val df = Seq[(Int, java.lang.Long)](
       (1, 1234L), (1, null), (1, -34L), (2, null), (2, null))
       .toDF("g", "x")
@@ -93,7 +91,7 @@ class Sum128Spec extends SparkSpecBase {
     // change a single bit: the wrapping LEGACY adds and the carry logic
     // run through Expression.eval instead of generated Java
     import spark.implicits._
-    register()
+    graft.plans.GraftFunctions.ensure(spark)
     val prevWs = spark.conf.get("spark.sql.codegen.wholeStage")
     val prevF = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     try {
@@ -113,7 +111,7 @@ class Sum128Spec extends SparkSpecBase {
   test("money parity on the fixture and the plan stays in whole-stage codegen") {
     import spark.implicits._
     import graft.Exact.money
-    register()
+    graft.plans.GraftFunctions.ensure(spark)
     val li = Tables.lineitem(spark, sfDir)
       .select($"l_returnflag".as("g"),
         (money($"l_extendedprice") * 100).cast("long").as("pc"),

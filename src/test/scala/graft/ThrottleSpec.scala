@@ -74,4 +74,22 @@ class ThrottleSpec extends SparkSpecBase {
       assert(throttled === base)
     } finally spark.conf.set("spark.graft.source.maxRowsPerSecond", "0")
   }
+
+  /** The knob's parse must fail on the driver, naming the key, before any
+    * job runs — not as a bare NumberFormatException. */
+  private def assertRefused(key: String, bad: String): Unit = {
+    spark.conf.set(key, bad)
+    val e = try intercept[IllegalArgumentException](
+      graft.sources.Paginated.s4PointLookup(spark, sfDir))
+    finally spark.conf.unset(key)
+    assert(e.getMessage.contains(key), e.getMessage)
+  }
+
+  test("a malformed maxRowsPerSecond fails naming its key") {
+    assertRefused("spark.graft.source.maxRowsPerSecond", "10/s")
+  }
+
+  test("a malformed rateJitter fails naming its key") {
+    assertRefused("spark.graft.source.rateJitter", "20%")
+  }
 }

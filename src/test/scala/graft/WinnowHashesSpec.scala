@@ -26,7 +26,7 @@ class WinnowHashesSpec extends SparkSpecBase {
 
   test("winnow_hashes equals the composed window-min fold on the fixture") {
     import spark.implicits._
-    graft.plans.WinnowHashes.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val docs = Tables.documents(spark, sfDir)
     val cmp = docs.select(
       $"doc_id",
@@ -48,7 +48,7 @@ class WinnowHashesSpec extends SparkSpecBase {
 
   test("MOSS guarantee: a shared run of w+k-1 words collides; null-safe; short docs empty") {
     import spark.implicits._
-    graft.plans.WinnowHashes.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     // two documents sharing EXACTLY a (w+k-1)-word run, otherwise disjoint
     val run = (1 to (W + K - 1)).map(i => s"shared$i").mkString(" ")
     val a = (1 to 30).map(i => s"alpha$i").mkString(" ") + " " + run
@@ -66,7 +66,7 @@ class WinnowHashesSpec extends SparkSpecBase {
 
   test("l26 screen surfaces planted near-duplicates and respects the df cap") {
     import spark.implicits._
-    graft.plans.WinnowHashes.register(spark)
+    graft.plans.GraftFunctions.ensure(spark)
     val run = (1 to 40).map(i => s"common$i").mkString(" ")
     val boiler = (1 to 40).map(_ => "license boilerplate header text").mkString(" ")
     val docs = (1 to 30).map { i =>
